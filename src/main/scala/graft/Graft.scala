@@ -272,19 +272,13 @@ object Graft {
     * pre-tokenized text, the F52 ⊕ F33 law extended to the whole
     * manifest); defaults to whitespace tokens, the graded contract.
     *
-    * `doCheckpoint` (round 19, advice): the salted copies frame feeds
-    * both sides of the manifest join, so by default it is
-    * localCheckpoint'd LAZILY (eager = false — no job at construction;
+    * The salted copies frame feeds both sides of the manifest join, so
+    * it is cut LAZILY ([[Cut]], eager = false — no job at construction;
     * the first action materializes it, the second side reuses it: the
-    * mix18 cert's 55→31 s win either way). Ownership: the checkpoint
-    * blocks live until the SparkSession ends or the executor storage
-    * evicts them — a caller building MANY manifests in one session who
-    * wants deterministic release should pass `doCheckpoint = false`
-    * and manage its own persist/unpersist around the returned frame;
-    * note lineage truncation also makes executor loss during the job
-    * non-recomputable (acceptable for a manifest job you just re-run).
-    */
-  /** `fill` (optimization round 21): a caller who has ALREADY materialized
+    * mix18 cert's 55→31 s win). The cut blocks live until the
+    * SparkSession ends or the executor storage evicts them.
+    *
+    * `fill` (optimization round 21): a caller who has ALREADY materialized
     * `TextOps.tokenBudgetMix(docs, budgets, ...)` — e.g. to derive epoch
     * weights from the kept token mass, the exact q_mix_manifest shape —
     * passes it here so the F33 bucketed-prefix-sum fill executes once
@@ -296,7 +290,6 @@ object Graft {
   def mixManifest(docs: DataFrame, budgets: Map[String, Long],
       epochsMicros: Map[String, Long], nShards: Int, seed: Long = 0L,
       tokenCount: Option[org.apache.spark.sql.Column] = None,
-      doCheckpoint: Boolean = true,
       fill: Option[DataFrame] = None)
       : DataFrame = {
     import org.apache.spark.sql.functions.{col, concat, lit, size, split}
@@ -320,11 +313,9 @@ object Graft {
     // ReusedExchange, 18 parquet scans in the un-checkpointed plan);
     // at corpus scale that is 2× the corpus passes. Intra-query reuse,
     // the F19c pattern (round 18); LAZY since round 19 (advice) so
-    // construction runs no job — see the doCheckpoint scaladoc.
-    val salted0 = copies.withColumn("copy_id",
-      concat(col("doc_id").cast("string"), lit(":"), col("epoch")))
-    val salted =
-      if (doCheckpoint) salted0.localCheckpoint(eager = false) else salted0
+    // construction runs no job.
+    val salted = Cut(copies.withColumn("copy_id",
+      concat(col("doc_id").cast("string"), lit(":"), col("epoch"))), eager = false)
     salted.join(
         TextOps.shuffleShards(salted, nShards, seed, idCol = "copy_id"),
         Seq("copy_id"))
@@ -388,10 +379,8 @@ object Graft {
     * to its centroid. See [[Similarity.prototypeDiversify]].
     */
   def diversify(spark: SparkSession, emb: DataFrame, dropMillionths: Long,
-      k: Int = 0, iters: Int = 2,
-      checkpointDir: Option[String] = None): DataFrame =
-    Similarity.prototypeDiversify(spark, emb, dropMillionths, k, iters,
-      checkpointDir = checkpointDir)
+      k: Int = 0, iters: Int = 2): DataFrame =
+    Similarity.prototypeDiversify(spark, emb, dropMillionths, k, iters)
 
   def splitByGroup(labeled: DataFrame, testMillionths: Long,
       groupCol: String = "cluster_id", seed: Long = 0L): DataFrame =
@@ -447,24 +436,10 @@ object Graft {
       minCos: Double = 0.35, nHint: Long = 0L): DataFrame =
     Similarity.lshCandidates(spark, emb, minCos, nHint = nHint)
 
-  /** Gopher/C4-style per-doc repetition quality signals. */
-  def repetitionSignals(spark: SparkSession, dir: String): DataFrame =
-    TextOps.qRepetition.fn(spark, dir)
-
-  /** PII match counts + md5-pinned redacted text per doc. */
-  def piiRedact(spark: SparkSession, dir: String): DataFrame =
-    TextOps.qPiiRedact.fn(spark, dir)
-
   /** The `writeStream.format(...)` name of the Kinesis-semantics
     * DataSourceV2 sink (options: baseDir, numShards).
     */
   val KinesisSinkFormat: String = classOf[pipeline.KinesisTableProvider].getName
-
-  /** Exact brute-force cosine top-k pairs (correctness baseline; the scale
-    * paths are lshCandidates / ivfKMeans).
-    */
-  def cosineTopK(spark: SparkSession, dir: String): DataFrame =
-    Similarity.qCosineTopk.fn(spark, dir)
 
   /** IVF ANN with MLlib-KMeans centroids and nprobe cells per query.
     * One-shot (fits per call); for repeated query batches over one corpus
@@ -545,26 +520,6 @@ object Graft {
   def annLoadCompressed(spark: SparkSession, dir: String): Pq.IvfPqIndex =
     Pq.ivfPqLoad(spark, dir)
 
-  /** Duplicated-substring signal: per-doc count/fraction of 10-token
-    * windows occurring more than once in the corpus.
-    */
-  def duplicatedSubstrings(spark: SparkSession, dir: String): DataFrame =
-    TextOps.qDupSubstrings.fn(spark, dir)
-
-  /** Token-window chunking (size 32 / stride 24) — training/RAG sequence
-    * prep. */
-  def chunkDocuments(spark: SparkSession, dir: String): DataFrame =
-    TextOps.qChunking.fn(spark, dir)
-
-  /** Stratified deterministic hash sampling for training-mix
-    * construction. */
-  def stratifiedSample(spark: SparkSession, dir: String): DataFrame =
-    TextOps.qStratifiedSample.fn(spark, dir)
-
-  /** Unigram-LM quality score (avg NLL + rare-token count) per doc. */
-  def lmQuality(spark: SparkSession, dir: String): DataFrame =
-    TextOps.qLmQuality.fn(spark, dir)
-
   /** DSIR importance weights (F46, round 16): per raw doc, the integer-
     * micro log-likelihood ratio of the target hashed-n-gram model vs the
     * raw model. Feed to [[TextOps.weightedBernoulli]] (resampling — the
@@ -578,24 +533,6 @@ object Graft {
   def sessionizeTimers(events: org.apache.spark.sql.Dataset[streaming.StreamOps.Ev],
       gapMillis: Long = 600000L) =
     streaming.StreamOps.sessionizeTws(events, gapMillis)
-
-  /** Semantic dedup: connected components over the embedding-cosine
-    * near-dup graph (exact edges; swap in lshNearDupPairs at scale). */
-  def semanticDedupClusters(spark: SparkSession, dir: String): DataFrame =
-    Similarity.qSemanticDedup.fn(spark, dir)
-
-  /** Per-shard Kinesis ingress pacing (1000 rec/s + 1 MiB/s). */
-  def shardThrottle(): pipeline.KinesisSink.ShardThrottle =
-    new pipeline.KinesisSink.ShardThrottle()
-
-  /** Executor-resident `throttleFor` for `KinesisSink.deliver`: bucket
-    * state is keyed by (scope, shard) on the executor JVM and survives
-    * across tasks and micro-batches — a throttle constructed in the
-    * closure itself would arrive serialized with a full bucket every
-    * batch. The V2 sink gets the same via its throttle options.
-    */
-  def shardThrottleFor(scope: String): Int => Option[pipeline.KinesisSink.ShardThrottle] =
-    shard => Some(pipeline.KinesisSink.ShardThrottle.resident(scope, shard))
 
   /** Quality-gate knobs for [[curateCorpus]]: token-count bounds and the
     * stopword lexicon/ratio a real curation run tunes per corpus.
@@ -769,7 +706,7 @@ object Graft {
     *    importance model.
     */
   final case class DsirKeep(target: DataFrame, buckets: Int = 1024,
-      seed: Long = 0L, checkpointDir: Option[String] = None,
+      seed: Long = 0L,
       rawReference: Option[DataFrame] = None,
       preFit: Option[TextOps.DsirModel] = None) {
     require(buckets > 0, s"buckets must be positive, got $buckets")
@@ -778,7 +715,7 @@ object Graft {
       val ref = rawReference.getOrElse(throw new IllegalArgumentException(
         "DsirKeep needs `rawReference` (the frozen raw-model fit corpus) " +
           "in a streaming pipeline — the pool fit needs the whole pool"))
-      TextOps.dsirFit(ref, target, buckets, seed, checkpointDir)
+      TextOps.dsirFit(ref, target, buckets, seed)
     }
   }
 
@@ -787,7 +724,7 @@ object Graft {
       * importance model — the F46c "last month's model" serving path:
       * no fit corpora; `target` is never touched when `preFit` is set. */
     def frozen(model: TextOps.DsirModel): DsirKeep =
-      DsirKeep(null, model.buckets, model.seed, None, None, Some(model))
+      DsirKeep(null, model.buckets, model.seed, None, Some(model))
   }
 
   /** Calibrated per-source quality gate (F44 wired into curation — round
@@ -1256,10 +1193,10 @@ object Graft {
     val audit = counts.zip(counts.head._2 +: counts.map(_._2)).map {
       case ((name, kept), prev) => StageCount(name, kept, prev - kept)
     }
-    val survivors = stages.last._2.localCheckpoint(eager = false)
+    val survivors = Cut(stages.last._2, eager = false)
     val ledger = curationLedger(stages.init :+ (stages.last._1 -> survivors))
-    val manifest = mixManifest(survivors, budgets, epochsMicros, nShards,
-      seed, tokenCount).localCheckpoint(eager = false)
+    val manifest = Cut(mixManifest(survivors, budgets, epochsMicros, nShards,
+      seed, tokenCount), eager = false)
     val wIn = org.apache.spark.sql.expressions.Window
       .partitionBy(col("shard")).orderBy(col("pos"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -1578,8 +1515,7 @@ object Graft {
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
     // consumed by CC's node list, CC's edge list, AND the later semi-joins
     // — checkpoint so the exact-dedup join runs once, not 3+ times
-    val d1 = base.join(reps1, Seq("doc_id"), "left_semi")
-      .localCheckpoint(eager = false)
+    val d1 = Cut(base.join(reps1, Seq("doc_id"), "left_semi"), eager = false)
     val cc = Dedup.connectedComponents(spark, d1,
       Dedup.jaccardEdgesOf(spark, d1, minJaccard))
     val d2 = d1.join(
@@ -1666,8 +1602,7 @@ object Graft {
       // the loaded model.
       if (dk.rawReference.isEmpty && dk.preFit.isEmpty)
         d3d.join(
-          TextOps.dsirResample(d3d, dk.target, dk.buckets, dk.seed,
-            dk.checkpointDir).select("doc_id"),
+          TextOps.dsirResample(d3d, dk.target, dk.buckets, dk.seed).select("doc_id"),
           Seq("doc_id"), "left_semi")
       else
         d3d.filter(dk.model.keepCol(col("text"), col("doc_id")))

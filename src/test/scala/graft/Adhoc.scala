@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CheckpointDirs.withCheckpointDir
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Containers
@@ -432,16 +433,17 @@ object Adhoc {
         .select(col("id").as("a_id"), (col("id") + 1).as("b_id"))
       val edges = clique.unionByName(chain).localCheckpoint(eager = true)
       println(s"edges: ${edges.count()}")
-      // rep 1/2: the default localCheckpoint loop; rep 3: the reliable
-      // checkpointDir option (round 8) at the same 50M edges — measures
+      // rep 1/2: the default localCheckpoint loop; rep 3: a reliable
+      // Spark checkpoint dir at the same 50M edges — measures
       // what executor-loss fault tolerance COSTS (a distributed-FS write
       // per cut; here local disk stands in for HDFS/S3)
       val ckptDir = java.nio.file.Files.createTempDirectory("megacc_ckpt").toString
       for (rep <- 1 to 3) {
         val dir = if (rep == 3) Some(ckptDir) else None
         val t0 = System.nanoTime()
-        val (cc, rounds) = Dedup.connectedComponentsWithRounds(spark, nodes, edges,
-          checkpointDir = dir)
+        val (cc, rounds) = withCheckpointDir(spark.sparkContext, dir) {
+          Dedup.connectedComponentsWithRounds(spark, nodes, edges)
+        }
         val sizes = Dedup.withClusterSize(cc)
           .groupBy(col("cluster_size")).count()
           .orderBy(col("cluster_size"))
@@ -1530,7 +1532,7 @@ object Adhoc {
       // chain) groups = 250M clique edges + 1,495 chain edges — one
       // decade past megacc's 50M, the breadth×depth mix at the volume
       // where per-round edge shuffle is the 100 TB cost model. Reps:
-      // default localCheckpoint loop, then the reliable checkpointDir
+      // default localCheckpoint loop, then the reliable checkpoint-dir
       // loop (the fault-tolerant 100 TB configuration) at the same
       // volume. rounds × edge-volume accounting printed for BASELINE.md.
       import spark.implicits._
@@ -1556,8 +1558,9 @@ object Adhoc {
       for (rep <- 1 to 2) {
         val dir = if (rep == 2) Some(ckptDir) else None
         val t0 = System.nanoTime()
-        val (cc, rounds) = Dedup.connectedComponentsWithRounds(spark, nodes, edges,
-          checkpointDir = dir)
+        val (cc, rounds) = withCheckpointDir(spark.sparkContext, dir) {
+          Dedup.connectedComponentsWithRounds(spark, nodes, edges)
+        }
         val sizes = Dedup.withClusterSize(cc)
           .groupBy(col("cluster_size")).count()
           .orderBy(col("cluster_size"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CheckpointDirs.withCheckpointDir
 import org.apache.spark.sql.functions._
 
 /** Round-13 additions: the three ADVICE items (strip_accents
@@ -281,8 +282,10 @@ class Round13OpsSpec extends SparkSpec {
     }
     try {
       val dir = tmpDir("ccstar_loss_ckpt")
-      val (df, _) = Dedup.connectedComponentsStarWithRounds(spark, nodes, edges,
-        checkpointDir = Some(dir), localFinishMaxEdges = 0L)
+      val (df, _) = withCheckpointDir(spark.sparkContext, Some(dir)) {
+        Dedup.connectedComponentsStarWithRounds(spark, nodes, edges,
+          localFinishMaxEdges = 0L)
+      }
       val labels = df.as[(Long, Long)].collect().toMap
       assert(labels.size == 200 && labels(149L) == 0L && labels(199L) == 150L,
         "reliable-checkpoint star CC must label correctly despite block loss")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CheckpointDirs.withCheckpointDir
 import org.apache.spark.sql.functions._
 
 /** Round-14 additions: the four ADVICE items (bloomSemiJoin key typing,
@@ -350,9 +351,10 @@ class Round14OpsSpec extends SparkSpec {
     }
     try {
       val dir = tmpDir("cchybrid_loss_ckpt")
-      val (df, rounds) = Dedup.connectedComponentsHybridWithRounds(
-        spark, nodes, edges, checkpointDir = Some(dir), starSwitchAfter = 4,
-        localFinishMaxEdges = 0L)
+      val (df, rounds) = withCheckpointDir(spark.sparkContext, Some(dir)) {
+        Dedup.connectedComponentsHybridWithRounds(
+          spark, nodes, edges, starSwitchAfter = 4, localFinishMaxEdges = 0L)
+      }
       val labels = df.as[(Long, Long)].collect().toMap
       assert(rounds > 4 && labels.size == 200 && labels(199L) == 0L,
         s"hybrid reliable-checkpoint run mislabeled (rounds=$rounds)")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CheckpointDirs.withCheckpointDir
 import org.apache.spark.sql.functions._
 
 /** Round-17 additions, per the round-16 verdict + ADVICE: the F46b DSIR
@@ -482,9 +483,10 @@ class Round17OpsSpec extends SparkSpec {
     val dir = tmpDir("dsir_ckpt")
     val base = TextOps.dsirWeights(raw, tgt, buckets = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val ckpt = TextOps.dsirWeights(raw, tgt, buckets = 64,
-        checkpointDir = Some(dir))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val ckpt = withCheckpointDir(spark.sparkContext, Some(dir)) {
+      TextOps.dsirWeights(raw, tgt, buckets = 64)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    }
     assert(ckpt == base)
     assert(new java.io.File(dir).listFiles() != null) // the dir was used
   }
@@ -500,8 +502,9 @@ class Round17OpsSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val base = flat(Similarity.semanticClustersClustered(spark, emb,
       minCos = 0.8, k = 4))
-    val ckpt = flat(Similarity.semanticClustersClustered(spark, emb,
-      minCos = 0.8, k = 4, checkpointDir = Some(dir)))
+    val ckpt = withCheckpointDir(spark.sparkContext, Some(dir)) {
+      flat(Similarity.semanticClustersClustered(spark, emb, minCos = 0.8, k = 4))
+    }
     assert(ckpt == base)
   }
 

@@ -2,10 +2,11 @@ package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+import org.apache.spark.CheckpointDirs.withCheckpointDir
 import org.apache.spark.sql.functions._
 
-/** Round-8 hardening: scale-aware LSH band defaults, the reliable-
-  * checkpoint escape hatch for the CC loop, the F22 single-sizing-job
+/** Round-8 hardening: scale-aware LSH band defaults, reliable lineage
+  * cuts under a Spark checkpoint dir, the F22 single-sizing-job
   * contract, and the lock-free throttle idle sweep.
   */
 class Round8OpsSpec extends SparkSpec {
@@ -55,25 +56,62 @@ class Round8OpsSpec extends SparkSpec {
   }
 
   test("CC labels are identical under the reliable-checkpoint option") {
-    // 2 planted components: a 2k-node star and a 60-node chain (deep
-    // enough to run several convergence blocks → several checkpoint cuts)
+    // every lineage cut follows Spark's checkpoint dir (graft.Cut): per
+    // operator family, the result with a reliable dir set must equal the
+    // unset-dir (localCheckpoint) result, checkpoint files must land
+    // under the dir, and no operator may move the dir itself
+    val sc = spark.sparkContext
+    val root = tmpDir("cut_reliable_ckpt")
+    def runAt[A](name: String, dir: Option[String])(run: => A): A =
+      withCheckpointDir(sc, dir) {
+        val set = sc.getCheckpointDir
+        try run finally assert(sc.getCheckpointDir == set, s"$name moved the checkpoint dir")
+      }
+    def same[A](name: String)(run: => A): A = {
+      val before = sc.getCheckpointDir
+      val dir = s"$root/$name"
+      val reliable = runAt(name, Some(dir))(run)
+      assert(reliable == runAt(name, None)(run), s"$name: reliable checkpoint changed the result")
+      assert(java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(java.nio.file.Files.isRegularFile(_)).count() > 0,
+        s"$name: no reliable checkpoint files were written")
+      assert(sc.getCheckpointDir == before, s"$name: checkpoint dir not restored")
+      reliable
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSet
+    // CC: a 2k-node star and a 60-node chain (deep enough to run several
+    // convergence blocks → several checkpoint cuts)
     val nodes = spark.range(0, 2060).select($"id".as("doc_id"))
-    val star = spark.range(1, 2000).select(lit(0L).as("a_id"), $"id".as("b_id"))
-    val chain = spark.range(2000, 2059)
-      .select($"id".as("a_id"), ($"id" + 1).as("b_id"))
-    val edges = star.unionByName(chain)
-    def labelsOf(ckpt: Option[String]): Map[Long, Long] =
-      Dedup.connectedComponents(spark, nodes, edges,
-        contractAbove = 1L, checkpointDir = ckpt, localFinishMaxEdges = 0L)
-        .as[(Long, Long)].collect().toMap
-    val dir = tmpDir("cc_reliable_ckpt")
-    val reliable = labelsOf(Some(dir))
-    assert(reliable == labelsOf(None), "reliable checkpoint changed the labels")
-    assert(reliable(1999L) == 0L && reliable(2059L) == 2000L)
-    // and it really went through the reliable path: checkpoint files exist
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(java.nio.file.Files.isRegularFile(_)).count()
-    assert(wrote > 0, "no reliable checkpoint files were written")
+    val edges = spark.range(1, 2000).select(lit(0L).as("a_id"), $"id".as("b_id"))
+      .unionByName(spark.range(2000, 2059).select($"id".as("a_id"), ($"id" + 1).as("b_id")))
+    val labels = same("cc")(Dedup.connectedComponents(spark, nodes, edges,
+      contractAbove = 1L, localFinishMaxEdges = 0L).as[(Long, Long)].collect().toMap)
+    assert(labels(1999L) == 0L && labels(2059L) == 2000L)
+    // the families with no reliable path before, on planted one-word edits
+    val rnd = new scala.util.Random(8)
+    val docs = (0 until 40).flatMap { i =>
+      val ws = Seq.fill(30)(s"w${rnd.nextInt(400)}")
+      Seq((i * 2L, if (i % 2 == 0) "a" else "b", ws.mkString(" ")),
+        (i * 2L + 1, if (i % 3 == 0) "a" else "b", ws.updated(7, "edit").mkString(" ")))
+    }.toDF("doc_id", "source", "text")
+    assert(same("jaccard")(rows(Dedup.jaccardPairsOf(spark, docs, 0.6))).nonEmpty)
+    same("containment")(rows(Dedup.containmentPairs(spark, docs, 0.8)))
+    same("minhash")(rows(MinHash.candidatePairs(docs, 0.5)))
+    same("mix_manifest")(rows(Graft.mixManifest(docs, Map("a" -> 300L, "b" -> 600L),
+      Map("a" -> 2000000L, "b" -> 1000000L), nShards = 4, seed = 3L)))
+    val sigs = Seq((1L, 0xF0F0L), (2L, 0xF0F1L), (3L, 0x0F0F0F0FL), (4L, 0xF0F0L))
+      .toDF("doc_id", "sig")
+    assert(same("media_sig")(rows(Multimodal.sigNearDupPairs(sigs, maxHamming = 3))).nonEmpty)
+    same("edit_distance")(rows(Dedup.editDistancePairsQGram(spark, docs.drop("source"), 8)))
+    // a q-gram vocabulary past the prefix-kernel cap forces the dfreq
+    // fallback cut inside the edit-distance join
+    val long = Seq.fill(300)(Seq.fill(300)(('a' + rnd.nextInt(26)).toChar).mkString)
+    assert(long.flatMap(_.sliding(4)).toSet.size > Dedup.PrefixKernelMaxVocab)
+    val longDocs = (long.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++
+      long.take(5).zipWithIndex.map { case (t, i) => (1000L + i, t.updated(150, '#')) })
+      .toDF("doc_id", "text")
+    val wide = same("edit_distance_fallback")(rows(Dedup.editDistancePairsQGram(spark, longDocs, 2)))
+    assert(wide.size >= 5, s"planted one-byte edits must pair: $wide")
   }
 
   test("F22 computes the eval window set exactly once on both sides of the broadcast threshold") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CheckpointDirs.withCheckpointDir
 import org.apache.spark.sql.functions._
 
 /** Round-9 hardening: the IVF fit/probe split (one k-means fit amortized
@@ -151,7 +152,7 @@ class Round9OpsSpec extends SparkSpec {
     // test hook fires at the top of every convergence block and drops
     // EVERY persisted block in the session — exactly what an executor
     // crash does to localCheckpoint state. The reliable path must finish
-    // with correct labels (its rounds live as files under checkpointDir);
+    // with correct labels (its rounds live as files under the checkpoint dir);
     // the default localCheckpoint path must die, proving the gap the
     // option exists to close is real.
     val nodes = spark.range(0, 400).select($"id".as("doc_id"))
@@ -167,17 +168,20 @@ class Round9OpsSpec extends SparkSpec {
     }
     try {
       val dir = tmpDir("cc_loss_ckpt")
-      val labels = Dedup.connectedComponents(spark, nodes, edges,
-        checkpointDir = Some(dir), localFinishMaxEdges = 0L)
-        .as[(Long, Long)].collect().toMap
+      val labels = withCheckpointDir(spark.sparkContext, Some(dir)) {
+        Dedup.connectedComponents(spark, nodes, edges, localFinishMaxEdges = 0L)
+          .as[(Long, Long)].collect().toMap
+      }
       assert(labels(149L) == 0L && labels(399L) == 150L,
         "reliable-checkpoint CC must label correctly despite block loss")
       assert(labels.size == 400)
       // the same loss kills the default path: localCheckpoint blocks are
       // the ONLY copy, and their lineage is truncated
       val ex = intercept[Exception] {
-        Dedup.connectedComponents(spark, nodes, edges, localFinishMaxEdges = 0L)
-          .as[(Long, Long)].collect()
+        withCheckpointDir(spark.sparkContext, None) {
+          Dedup.connectedComponents(spark, nodes, edges, localFinishMaxEdges = 0L)
+            .as[(Long, Long)].collect()
+        }
       }
       assert(ex.getMessage != null)
     } finally Dedup.testBlockLossHook = None
