@@ -153,14 +153,6 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("jaccard"))
   }
 
-  /** Shingle vocabularies at or under this size take the
-    * `freq_order_values` kernel path in [[containmentPairs]] — the df
-    * table rides as a driver-held literal (≤ 1 MB plan payload, the
-    * PrefixKernelMaxVocab class). Word-shingle vocabularies grow with
-    * the corpus, so at 100 TB the explode + join shape is the expected
-    * (and exact-identical) path. */
-  val ContainmentKernelMaxVocab: Long = 1L << 16
-
   /** F47 (round 16): near-CONTAINMENT detection — every ORDERED doc pair
     * (inner, outer) whose word-3-gram containment
     * c(inner → outer) = |S(inner) ∩ S(outer)| / |S(inner)| ≥ `minC`
@@ -232,34 +224,21 @@ object Dedup {
     // positional filter below apply to the asymmetric join too (both
     // positions are ranks under one shared total order).
     //
-    // df FIT + per-doc re-order, two result-identical shapes on the
-    // vocab size (optimization round 21, the edit-join qgram_freq_agg
-    // pattern):
-    //   - vocab ≤ ContainmentKernelMaxVocab (fit non-NULL): ONE bounded
-    //     map-aggregate pass (`long_freq_agg`) fits the df table, and
-    //     each doc's (df, shingle)-ascending order is the per-row
-    //     `freq_order_values` kernel against the driver-held table — no
-    //     occurrence explode, no df join, no collect_list doc_id shuffle
-    //     (measured 0.61 s of q_f47's 1.05 s at sf0.1);
-    //   - larger vocabs (fit NULL — word-shingle vocabularies grow with
-    //     the corpus, so this IS the 100 TB path) keep the explode →
-    //     df join → sort_array(collect_list) shape, lazily cut so the
-    //     aggregation feeds both posexplode sides structurally (the
-    //     committed round-20 plans show it planned twice, no
-    //     ReusedExchange).
-    val fitRow = base
-      .agg(call_function("long_freq_agg", col("shs"),
-        lit(ContainmentKernelMaxVocab.toInt)).as("ft"))
-      .head()
-    val fit = if (fitRow.isNullAt(0)) null else fitRow.getStruct(0)
-    val ordAll =
-      if (fit != null) {
-        val keys = fit.getSeq[Long](0).toSeq
-        val freqs = fit.getSeq[Long](1).toSeq
+    // df FIT + per-doc re-order, two result-identical shapes:
+    //   - the df table fits [[DriverTable]]: each doc's (df, shingle)-
+    //     ascending order is the per-row `freq_order_values` kernel — no
+    //     occurrence explode, df join or doc_id shuffle (measured 0.61 s
+    //     of q_f47's 1.05 s at sf0.1);
+    //   - it does not (word-shingle vocabularies grow with the corpus:
+    //     the 100 TB path): explode → df join → sort_array(collect_list),
+    //     lazily cut so both posexplode sides read one aggregation (the
+    //     round-20 plans show it planned twice, no ReusedExchange).
+    val ordAll = DriverTable.freqs(base, "long_freq_agg", col("shs")) match {
+      case Some((keys, freqs)) =>
         base.select(col("doc_id"), col("sz"),
           call_function("freq_order_values", col("shs"),
             typedLit(keys), typedLit(freqs)).as("ord"))
-      } else {
+      case None =>
         val sh = base.select(col("doc_id"), col("sz"), explode(col("shs")).as("shh"))
         // global df per shingle: partial-agg collapsed, hot = one row
         val df = sh.groupBy(col("shh")).agg(count(lit(1)).as("__df"))
@@ -267,7 +246,7 @@ object Dedup {
           .groupBy(col("doc_id"), col("sz"))
           .agg(expr("transform(sort_array(collect_list(struct(__df, shh))), p -> p.shh)")
             .as("ord")), eager = false)
-      }
+    }
     val inner = ordAll
       .select(col("doc_id").as("inner_id"), col("sz").as("sa"),
         posexplode(slice(col("ord"), lit(1), prefLen)).as(Seq("pi", "shh")))
@@ -787,16 +766,6 @@ object Dedup {
     */
   val maxBroadcastGrams: Long = 4000000L
 
-  /** Vocabularies at or under this size take the `prefix_top_values`
-    * kernel path in [[editDistancePairsQGram]] — the corpus gram
-    * frequency table rides as a driver-held literal (≤ 1 MB plan
-    * payload), retiring the per-occurrence freq join + heap shuffle.
-    * Since round 21 the table itself is FIT by the one-pass
-    * `qgram_freq_agg` bounded map aggregate (cap = this constant, so
-    * every task buffer stays ≤ 1 MB); an overflowing vocab falls back to
-    * the explode + groupBy fit and the guarded-broadcast join shape. */
-  val PrefixKernelMaxVocab: Long = 1L << 16
-
   /** The SCALE path for [[editDistancePairsOf]]: q-gram count/prefix/
     * position-filter candidate generation (the classic approximate-
     * string-join scheme from the published set-join literature — count
@@ -874,23 +843,12 @@ object Dedup {
     // |G| = max(0, bytelen−q+1); smallness decided on ng, zone on bytes
     val big = base.filter(col("ng") > qd)
     val shortZone = docs.filter(octet_length(col("text")) <= (q - 1) + qd + maxDist)
-    // Corpus gram-frequency fit (optimization round 21, guide §2.3/§2.4):
-    // ONE bounded map-aggregate pass (`qgram_freq_agg`) replaces the
-    // explode-one-row-per-occurrence → groupBy → localCheckpoint →
-    // count() → collect() chain whenever the vocabulary fits the prefix-
-    // kernel budget — each task ships a ≤1 MB key/count map instead of
-    // ~8× the corpus bytes of gram rows, and the vocab-size probe and the
-    // table pull collapse into the same single job. A NULL result means
-    // the vocab overflowed the 2^16 cap somewhere; only then is the old
-    // explode + groupBy frequency table built (and kept checkpointed for
-    // its two consumers), with the guarded broadcast split as before:
-    // vocabularies past the broadcast cap fall back to a shuffle join,
-    // identical output.
-    val fitRow = big
-      .agg(call_function("qgram_freq_agg", col("text"), lit(q),
-        lit(PrefixKernelMaxVocab.toInt)).as("ft"))
-      .head()
-    val fit = if (fitRow.isNullAt(0)) null else fitRow.getStruct(0)
+    // Corpus gram-frequency fit as ONE bounded map-aggregate job
+    // ([[DriverTable.freqs]]): each task ships a bounded key/count map,
+    // not ~8× the corpus bytes of gram rows. Only when the table does not
+    // fit is the explode + groupBy table built (cut for its two
+    // consumers), broadcast unless past maxBroadcastGrams.
+    val fit = DriverTable.freqs(big, "qgram_freq_agg", col("text"), lit(q))
     lazy val gx = big.select(col("doc_id"),
       explode(call_function("char_qgram_hashes", col("text"), lit(q))).as("gh"))
     // sized once, reused by join or pull
@@ -912,23 +870,11 @@ object Dedup {
     // guarantee needs the boundary value's EVERY occurrence in the
     // prefix; an arbitrary tie truncation can strand a matching edge's
     // partner outside it with only a position-incompatible twin inside.
-    // Prefix selection, two result-identical shapes on the vocab size
-    // (optimization round 20, Round20OptSpec pins equality; the fit
-    // itself is the one-pass qgram_freq_agg since round 21):
-    //   - vocab ≤ PrefixKernelMaxVocab (fit non-NULL): the aggregate's
-    //     table rides as a driver-held literal and each doc's prefix is
-    //     selected by the per-row `prefix_top_values` kernel — no
-    //     per-occurrence rows, no freq join, no doc_id shuffle;
-    //   - larger vocabs (fit NULL) keep the explode → guarded-broadcast
-    //     freq join → bounded-heap `collect_top_k` shape.
-    val kvalsCol: Column =
-      if (fit != null) {
-        val keys = fit.getSeq[Long](0).toSeq
-        val freqs = fit.getSeq[Long](1).toSeq
-        call_function("prefix_top_values",
-          call_function("char_qgram_hashes", col("text"), lit(q)),
-          lit(qd + 1), typedLit(keys), typedLit(freqs))
-      } else null
+    // Prefix selection, two result-identical shapes (Round20OptSpec):
+    // the per-row `prefix_top_values` kernel against the driver-held
+    // table when it fits — no per-occurrence rows, freq join or doc_id
+    // shuffle — else explode → guarded-broadcast freq join →
+    // bounded-heap `collect_top_k`.
     def topValsJoin = {
       val dfreqSide =
         if (vocab <= maxBroadcastGrams) broadcast(dfreq) else dfreq
@@ -951,9 +897,13 @@ object Dedup {
     // candidate join grows quadratically — prefix LENGTH is the lever
     // that survives saturation (measured: 30M candidates at 4.4M titles
     // with the fixed prefix).
-    val withKvals =
-      if (kvalsCol != null) big.withColumn("kvals", kvalsCol)
-      else big.join(topValsJoin, Seq("doc_id"))
+    val withKvals = fit match {
+      case Some((keys, freqs)) =>
+        big.withColumn("kvals", call_function("prefix_top_values",
+          call_function("char_qgram_hashes", col("text"), lit(q)),
+          lit(qd + 1), typedLit(keys), typedLit(freqs)))
+      case None => big.join(topValsJoin, Seq("doc_id"))
+    }
     val pre = withKvals
       .select(col("doc_id"), col("len"), col("text"),
         explode(call_function("adaptive_prefix_values",

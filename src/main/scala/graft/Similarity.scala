@@ -713,16 +713,6 @@ object Similarity {
       topK: Int, queryPred: Column): DataFrame =
     ivfProbe(ivfFit(s, emb, k), queryPred, nprobe, topK)
 
-  /** Vector corpora at or under this many total floats ride the
-    * `cos_edges_above` kernel path in [[exactCosineEdges]] — the table
-    * ships as a driver-held literal (≤ ~2 MB plan payload, the
-    * prefix_top_values / kmeans_best_q budget class). Larger corpora
-    * keep the nested-loop join, which is the honest shape when the
-    * reference no longer belongs in the plan — and at genuine corpus
-    * scale the brute-force build is the wrong operator anyway
-    * ([[semanticClusters]]' useLsh path is the 100 TB shape). */
-  val MaxCosKernelFloats: Long = 1L << 19
-
   /** Exact brute-force cosine near-dup edge list (a_id < b_id, cosine ≥
     * minCos) — the correctness-baseline edge source for [[semanticClusters]].
     *
@@ -734,33 +724,34 @@ object Similarity {
     * vectors → 2M pair rows → 1.05 s for 4,137 edges at sf0.1; kernel
     * path ~0.2 s, identical edge set). Same dot order, same norms, same
     * double division, so the boundary cannot move (Round21OptSpec +
-    * oracle). Oversized corpora keep the join shape below.
+    * oracle). A table past [[DriverTable]]'s budget (per row: an 8-byte
+    * id, 4 bytes a float plus a bit of null bitmap, a few header words)
+    * keeps the join shape below, which is the honest shape when the
+    * reference no longer belongs in the plan — and at genuine corpus
+    * scale the brute-force build is the wrong operator anyway
+    * ([[semanticClusters]]' useLsh path is the 100 TB shape).
     */
   def exactCosineEdges(s: SparkSession, emb: DataFrame, minCos: Double): DataFrame = {
     VectorFunctions.register(s)
-    // bounded probe-pull: one CollectLimit job; the +1 row proves overflow
-    val budgetRows = (MaxCosKernelFloats / 8).toInt // dim ≥ 8 in any real corpus
-    val pulled = emb.select(col("vec_id"), col("embedding"))
-      .limit(budgetRows + 1).collect()
-    val nFloats = pulled.iterator
-      .map(r => if (r.isNullAt(1)) 0L else r.getSeq[Float](1).length.toLong).sum
-    if (pulled.length <= budgetRows && nFloats <= MaxCosKernelFloats) {
-      val valid = pulled.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      val ids = valid.map(_.getLong(0)).toSeq
-      val vecs = valid.map(_.getSeq[Float](1).toSeq).toSeq
-      emb.select(col("vec_id").as("a_id"),
-        explode(call_function("cos_edges_above", col("vec_id"), col("embedding"),
-          lit(minCos), typedLit(ids), typedLit(vecs))).as("b_id"))
-    } else {
-      // deliberately NOT [[spread]]: this plan is materialized by the CC
-      // loop's eager checkpoint, and the A/B (round 12) measured spread
-      // 2× SLOWER there (7.5 vs 3.3 s at sf0.1) — the repartition ahead of
-      // the non-equi join flips/fragments the join inside the checkpoint
-      // materialization instead of widening useful parallelism
-      val n = normedOf(s, emb)
-      side(n, "a").join(side(n, "b"), col("a_id") < col("b_id"))
-        .filter(dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")) >= minCos)
-        .select(col("a_id"), col("b_id"))
+    // no row cap: the byte budget bounds the row count
+    DriverTable.rows(emb.select(col("vec_id"), col("embedding")), Int.MaxValue) match {
+      case Some(pulled) =>
+        val valid = pulled.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+        val ids = valid.map(_.getLong(0)).toSeq
+        val vecs = valid.map(_.getSeq[Float](1).toSeq).toSeq
+        emb.select(col("vec_id").as("a_id"),
+          explode(call_function("cos_edges_above", col("vec_id"), col("embedding"),
+            lit(minCos), typedLit(ids), typedLit(vecs))).as("b_id"))
+      case None =>
+        // deliberately NOT [[spread]]: this plan is materialized by the CC
+        // loop's eager checkpoint, and the A/B (round 12) measured spread
+        // 2× SLOWER there (7.5 vs 3.3 s at sf0.1) — the repartition ahead of
+        // the non-equi join flips/fragments the join inside the checkpoint
+        // materialization instead of widening useful parallelism
+        val n = normedOf(s, emb)
+        side(n, "a").join(side(n, "b"), col("a_id") < col("b_id"))
+          .filter(dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")) >= minCos)
+          .select(col("a_id"), col("b_id"))
     }
   }
 

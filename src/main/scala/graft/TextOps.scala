@@ -1845,11 +1845,10 @@ object TextOps {
       .orderBy(col("lang"), col("key_micros").desc, col("doc_id"))
   }
 
-  /** Query-term frames at or under this many distinct terms ride the
-    * `term_tf_counts` kernel path in [[bm25Scores]] (driver-held table,
-    * tens of KB — the domainGate literal-list class); larger frames keep
-    * the explode + broadcast-join shape. */
-  val MaxLiteralQueryTerms: Int = 4096
+  /** Distinct-term cap of [[bm25Scores]]' kernel path besides the
+    * [[DriverTable]] byte budget: `term_tf_counts` emits one tf per query
+    * term per doc, so the term count bounds its per-row output width. */
+  private[graft] val MaxLiteralQueryTerms: Int = 4096
 
   /** F29 (round 14): BM25 relevance scoring — the retrieval primitive
     * behind search-based decontamination and example mining over a
@@ -1895,18 +1894,14 @@ object TextOps {
     // double-count tf (and idf would then sum the term twice); BM25 is
     // defined over the term SET, so dedup is semantics, not hygiene.
     //
-    // tf pass, two result-identical shapes on the query size
-    // (optimization round 21, guide §2.3): query-term lists are bounded
-    // by contract, so up to [[MaxLiteralQueryTerms]] of them ride as a
-    // driver-held TermTable and each doc's (dl, per-term tf) is ONE
-    // `term_tf_counts` byte walk — the retired shape exploded every
-    // corpus token (tokens × corpus rows at scale) just to broadcast-
-    // join ~5 terms and re-aggregate by (doc, term). An oversized term
-    // frame keeps the explode + join shape, identical output.
-    val pulledTerms = terms.select(col("term")).distinct()
-      .limit(MaxLiteralQueryTerms + 1).collect()
-    val tf =
-      if (pulledTerms.length <= MaxLiteralQueryTerms) {
+    // tf pass, two result-identical shapes: a term set that fits rides
+    // as a driver-held TermTable and each doc's (dl, per-term tf) is ONE
+    // `term_tf_counts` byte walk, instead of exploding every corpus token
+    // to broadcast-join ~5 terms; an oversized term frame keeps the
+    // explode + join shape.
+    val qterms = terms.select(col("term")).distinct()
+    val tf = DriverTable.rows(qterms, MaxLiteralQueryTerms) match {
+      case Some(pulledTerms) =>
         val termArr = pulledTerms.filter(!_.isNullAt(0)).map(_.getString(0)).sorted
         base.select(col("doc_id"),
             call_function("term_tf_counts",
@@ -1917,11 +1912,12 @@ object TextOps {
           .withColumn("term",
             element_at(typedLit(termArr.toSeq), col("__ti") + 1))
           .select(col("doc_id"), col("term"), col("dl"), col("tf"))
-      } else base
+      case None => base
         .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
-        .join(broadcast(terms.select(col("term")).distinct()), Seq("term"))
+        .join(broadcast(qterms), Seq("term"))
         .groupBy(col("doc_id"), col("term"), col("dl"))
         .agg(count(lit(1)).as("tf"))
+    }
     val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val idf6 = trunc6(log(
       (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) +

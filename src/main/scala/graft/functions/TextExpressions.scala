@@ -1657,12 +1657,10 @@ case class GramBucketCounts(child: Expression, nLow: Int, nHigh: Int,
 }
 
 /** Driver-held gram document-frequency table for the `prefix_top_values`
-  * kernel (optimization round 20): corpus-wide q-gram occurrence counts,
-  * pulled once when the vocabulary fits
-  * [[graft.Dedup.PrefixKernelMaxVocab]] — the same guarded-pull class as
-  * the broadcast the retired join shape used. Grams absent from the
-  * table count 0 (cannot happen when the table was fit on the same
-  * corpus; pinned for safety). */
+  * and `freq_order_values` kernels: corpus-wide occurrence counts, fit
+  * once by [[graft.DriverTable.freqs]] when the table fits its budget.
+  * Grams absent from the table count 0 (cannot happen when the table was
+  * fit on the same corpus; pinned for safety). */
 final class GramFreqTable(keys: Array[Long], freqs: Array[Long])
     extends Serializable {
   require(keys.length == freqs.length,
@@ -1952,15 +1950,16 @@ case class TermTfCounts(child: Expression, table: TermTable)
     copy(child = newChild)
 }
 
-/** Aggregation buffer for [[QgramFreqAgg]]: an open-addressing long→long
+/** Aggregation buffer for [[FreqAgg]]: an open-addressing long→long
   * occurrence-count map, hard-capped at `maxVocab` DISTINCT keys. The cap
   * is the spill-safety contract: a buffer never holds more than
-  * maxVocab × 16 B of key/count payload (1 MB at the edit-join's 2^16
-  * cap), so partial aggregation can never blow a task's memory the way an
-  * unbounded map aggregate could — the moment a partition (or a merge of
-  * partitions) would exceed the cap, the map drops its payload and
-  * carries only the `overflow` flag, and the caller falls back to the
-  * explode + groupBy shape, which spills gracefully.
+  * maxVocab × 16 B of key/count payload ([[graft.DriverTable.MaxBytes]]
+  * at the [[graft.DriverTable.MaxKeys]] cap), so partial aggregation can
+  * never blow a task's memory the way an unbounded map aggregate could —
+  * the moment a partition (or a merge of partitions) would exceed the
+  * cap, the map drops its payload and carries only the `overflow` flag,
+  * and the caller falls back to the explode + groupBy shape, which
+  * spills gracefully.
   */
 final class QgramFreqMap(val maxVocab: Int) {
   require(maxVocab >= 1, s"qgram_freq_agg: maxVocab must be >= 1, got $maxVocab")
@@ -2048,47 +2047,32 @@ final class QgramFreqMap(val maxVocab: Int) {
   }
 }
 
-/** `long_freq_agg(arr, max_vocab)` — corpus-wide occurrence counts of an
-  * array<bigint> column's elements as one partial-aggregated pass (the
-  * [[QgramFreqAgg]] buffer aimed at the containment join's shingle
-  * document-frequency fit): returns struct(keys ASC, freqs), NULL when
-  * the distinct vocabulary exceeds `max_vocab` anywhere — the caller's
-  * signal to build the explode + groupBy table instead. Buffers stay
-  * ≤ max_vocab × 16 B by construction. NULL arrays contribute nothing.
-  */
-case class LongFreqAgg(child: Expression, maxVocab: Int,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[QgramFreqMap] {
+/** The bounded frequency aggregates' shared body: a [[QgramFreqMap]]
+  * buffer folded to struct(keys array<bigint> ASC, freqs array<bigint>),
+  * NULL when the distinct vocabulary exceeded `maxVocab` anywhere (update
+  * or merge) — the caller's signal to build the explode + groupBy table
+  * instead ([[graft.DriverTable.freqs]] is the one caller). The bound is
+  * also what keeps every aggregation buffer ≤ maxVocab × 16 B (spill-safe
+  * by construction, never by spilling). Subclasses supply only the input
+  * check and how one row folds into the buffer. Serializable, so that
+  * deserializing a subclass skips this constructor and its check on
+  * fields not yet restored. */
+abstract class FreqAgg
+  extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[QgramFreqMap]
+  with Serializable {
+  def child: Expression
+  def maxVocab: Int
 
   require(maxVocab >= 1 && maxVocab <= (1 << 24),
-    s"long_freq_agg: max_vocab must be in [1, 2^24], got $maxVocab")
+    s"$prettyName: max_vocab must be in [1, 2^24], got $maxVocab")
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = true
   override def dataType: DataType = StructType(Seq(
     StructField("keys", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("freqs", ArrayType(LongType, containsNull = false), nullable = false)))
-  override def prettyName: String = "long_freq_agg"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"long_freq_agg requires array<bigint>, got ${t.catalogString}")
-  }
 
   override def createAggregationBuffer(): QgramFreqMap = new QgramFreqMap(maxVocab)
-
-  override def update(buf: QgramFreqMap,
-      input: org.apache.spark.sql.catalyst.InternalRow): QgramFreqMap = {
-    val v = child.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[ArrayData]
-      val n = arr.numElements()
-      var i = 0
-      while (i < n && !buf.overflow) { buf.add(arr.getLong(i), 1L); i += 1 }
-    }
-    buf
-  }
 
   override def merge(a: QgramFreqMap, b: QgramFreqMap): QgramFreqMap = {
     a.mergeFrom(b); a
@@ -2117,6 +2101,35 @@ case class LongFreqAgg(child: Expression, maxVocab: Int,
     var i = 0
     while (i < n) { out.add(bb.getLong, bb.getLong); i += 1 }
     out
+  }
+}
+
+/** `long_freq_agg(arr, max_vocab)` — corpus-wide occurrence counts of an
+  * array<bigint> column's elements as one partial-aggregated pass (the
+  * containment join's shingle document-frequency fit). NULL arrays
+  * contribute nothing.
+  */
+case class LongFreqAgg(child: Expression, maxVocab: Int,
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0) extends FreqAgg {
+
+  override def prettyName: String = "long_freq_agg"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"long_freq_agg requires array<bigint>, got ${t.catalogString}")
+  }
+
+  override def update(buf: QgramFreqMap,
+      input: org.apache.spark.sql.catalyst.InternalRow): QgramFreqMap = {
+    val v = child.eval(input)
+    if (v != null) {
+      val arr = v.asInstanceOf[ArrayData]
+      val n = arr.numElements()
+      var i = 0
+      while (i < n && !buf.overflow) { buf.add(arr.getLong(i), 1L); i += 1 }
+    }
+    buf
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): LongFreqAgg =
@@ -2159,32 +2172,19 @@ case class FreqOrderValues(child: Expression, table: GramFreqTable)
 }
 
 /** `qgram_freq_agg(text, q, max_vocab)` — the corpus byte-q-gram
-  * frequency FIT as one partial-aggregated pass (optimization round 21,
-  * the [[GramBucketCounts]] pattern aimed at the edit join): per-gram
-  * occurrence counts across all input rows, returned as one
-  * struct(keys array<bigint> ASC, freqs array<bigint>) — exactly the
-  * table [[graft.Dedup.editDistancePairsQGram]] previously built by
-  * exploding one row PER GRAM OCCURRENCE (~8× the corpus bytes) into a
-  * groupBy and then pulling it. NULL result ⇔ the distinct vocabulary
-  * exceeded `max_vocab` somewhere (update or merge) — the caller's signal
-  * to run the explode + groupBy shape instead; the bound is also what
-  * keeps every aggregation buffer ≤ max_vocab × 16 B (spill-safe by
-  * construction, never by spilling). Gram hash = charQgramHashes' exact
-  * per-position hash; NULL texts contribute nothing.
+  * frequency FIT as one partial-aggregated pass (the [[GramBucketCounts]]
+  * pattern aimed at the edit join): per-gram occurrence counts across all
+  * input rows — exactly the table [[graft.Dedup.editDistancePairsQGram]]
+  * would otherwise build by exploding one row PER GRAM OCCURRENCE (~8×
+  * the corpus bytes) into a groupBy. The grams are hashed in a fused byte
+  * walk (charQgramHashes' exact per-position hash), so the fit pays no
+  * `char_qgram_hashes` array or sort; NULL texts contribute nothing.
   */
 case class QgramFreqAgg(child: Expression, q: Int, maxVocab: Int,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[QgramFreqMap] {
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0) extends FreqAgg {
 
   require(q >= 2, s"qgram_freq_agg: q must be >= 2, got $q")
-  require(maxVocab >= 1 && maxVocab <= (1 << 24),
-    s"qgram_freq_agg: max_vocab must be in [1, 2^24], got $maxVocab")
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("keys", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("freqs", ArrayType(LongType, containsNull = false), nullable = false)))
   override def prettyName: String = "qgram_freq_agg"
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -2192,42 +2192,11 @@ case class QgramFreqAgg(child: Expression, q: Int, maxVocab: Int,
     else TypeCheckResult.TypeCheckFailure(
       s"qgram_freq_agg requires string, got ${child.dataType.catalogString}")
 
-  override def createAggregationBuffer(): QgramFreqMap = new QgramFreqMap(maxVocab)
-
   override def update(buf: QgramFreqMap,
       input: org.apache.spark.sql.catalyst.InternalRow): QgramFreqMap = {
     val v = child.eval(input)
     if (v != null) buf.addGrams(v.asInstanceOf[UTF8String].getBytes, q)
     buf
-  }
-
-  override def merge(a: QgramFreqMap, b: QgramFreqMap): QgramFreqMap = {
-    a.mergeFrom(b); a
-  }
-
-  override def eval(buf: QgramFreqMap): Any = {
-    val (ks, cs) = buf.sortedPairs()
-    if (ks == null) null
-    else org.apache.spark.sql.catalyst.InternalRow(
-      new GenericArrayData(ks), new GenericArrayData(cs))
-  }
-
-  override def serialize(buf: QgramFreqMap): Array[Byte] = {
-    if (buf.overflow) return Array[Byte](1)
-    val bb = java.nio.ByteBuffer.allocate(1 + 4 + buf.size * 16)
-    bb.put(0.toByte); bb.putInt(buf.size)
-    buf.foreach((k, c) => { bb.putLong(k); bb.putLong(c) })
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): QgramFreqMap = {
-    val out = new QgramFreqMap(maxVocab)
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    if (bb.get() != 0.toByte) { out.forceOverflow(); return out }
-    val n = bb.getInt
-    var i = 0
-    while (i < n) { out.add(bb.getLong, bb.getLong); i += 1 }
-    out
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): QgramFreqAgg =

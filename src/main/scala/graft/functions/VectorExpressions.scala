@@ -709,7 +709,7 @@ object VectorFunctions {
     // (optimization round 21): qgram_freq_agg(text, q, max_vocab) folds
     // the corpus gram-frequency table into a bounded map aggregate —
     // no per-occurrence explode, no gram shuffle; NULL result = vocab
-    // overflowed the cap, the caller's fallback signal
+    // overflowed the cap, graft.DriverTable.freqs' "does not fit"
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "qgram_freq_agg", (exprs: Seq[Expression]) =>
         QgramFreqAgg(exprs.head,
@@ -730,7 +730,8 @@ object VectorFunctions {
     // the shingle document-frequency table as one bounded map-aggregate
     // pass, and the per-doc (df, shingle)-ascending re-order as one
     // codegen map against the driver-held table — no occurrence explode,
-    // no df join, no collect_list doc_id shuffle when the vocab fits
+    // no df join, no collect_list doc_id shuffle when the table fits
+    // graft.DriverTable
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "long_freq_agg", (exprs: Seq[Expression]) =>
         LongFreqAgg(exprs.head,

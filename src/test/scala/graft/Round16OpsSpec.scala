@@ -298,26 +298,37 @@ class Round16OpsSpec extends SparkSpec {
     // containments (plus whatever the random collisions produce)
     val wrapped = bases.collect { case (id, text) if id % 5 == 0 =>
       (1000L + id, s"hdr$id nav chrome $text footer$id links legal") }
-    val docs = (bases ++ wrapped).toDF("doc_id", "text").localCheckpoint()
-    for (t <- Seq(0.5, 0.75, 0.9)) {
-      val fast = Dedup.containmentPairs(spark, docs, t)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      // exhaustive reference: full shingle equi-join, no prefix filter
-      val sh = docs.select(col("doc_id"),
-          explode(call_function("shingle_hashes", col("text"), lit(3))).as("h"))
-        .distinct()
-      val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val slow = sh.select(col("doc_id").as("inner_id"), col("h"))
-        .join(sh.select(col("doc_id").as("outer_id"), col("h")), Seq("h"))
-        .filter(col("inner_id") =!= col("outer_id"))
-        .groupBy(col("inner_id"), col("outer_id")).agg(count(lit(1)).as("i"))
-        .join(sz.select(col("doc_id").as("inner_id"), col("sz").as("sa")), Seq("inner_id"))
-        .filter(col("i").cast("double") / col("sa") >= t)
-        .select(col("inner_id"), col("outer_id"),
-          expr("(i * 1000000L) div sa").as("c"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(fast == slow, s"t=$t: fast ${fast.size} vs exhaustive ${slow.size}")
-      assert(t > 0.5 || slow.nonEmpty, "the law must exercise non-empty pair sets")
+    // a second corpus with > 2^16 distinct word 3-grams overflows the
+    // driver-held df table, so the explode + df-join fallback runs too
+    val wideBases = (0 until 720).map { i =>
+      (i.toLong, Seq.fill(100)(s"v${rnd.nextInt(20000)}").mkString(" "))
+    }
+    val wideWrapped = wideBases.collect { case (id, text) if id % 40 == 0 =>
+      (1000L + id, s"hdr$id $text footer$id") }
+    for ((rows, kernel) <- Seq((bases ++ wrapped, true), (wideBases ++ wideWrapped, false))) {
+      val docs = rows.toDF("doc_id", "text").localCheckpoint()
+      assert(DriverTable.freqs(docs.select(call_function("shingle_hashes", col("text"),
+        lit(MinHash.GramLen)).as("shs")), "long_freq_agg", col("shs")).isDefined == kernel)
+      for (t <- Seq(0.5, 0.75, 0.9)) {
+        val fast = Dedup.containmentPairs(spark, docs, t)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        // exhaustive reference: full shingle equi-join, no prefix filter
+        val sh = docs.select(col("doc_id"),
+            explode(call_function("shingle_hashes", col("text"), lit(3))).as("h"))
+          .distinct()
+        val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+        val slow = sh.select(col("doc_id").as("inner_id"), col("h"))
+          .join(sh.select(col("doc_id").as("outer_id"), col("h")), Seq("h"))
+          .filter(col("inner_id") =!= col("outer_id"))
+          .groupBy(col("inner_id"), col("outer_id")).agg(count(lit(1)).as("i"))
+          .join(sz.select(col("doc_id").as("inner_id"), col("sz").as("sa")), Seq("inner_id"))
+          .filter(col("i").cast("double") / col("sa") >= t)
+          .select(col("inner_id"), col("outer_id"),
+            expr("(i * 1000000L) div sa").as("c"))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        assert(fast == slow, s"kernel=$kernel t=$t: fast ${fast.size} vs exhaustive ${slow.size}")
+        assert(t > 0.5 || slow.nonEmpty, "the law must exercise non-empty pair sets")
+      }
     }
   }
 

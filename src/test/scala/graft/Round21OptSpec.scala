@@ -1,14 +1,15 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Optimization round 21: equivalence pins for every operator whose
   * internals changed this round.
   *
-  *   1. `qgram_freq_agg` — the one-pass edit-join frequency fit — must
-  *      produce the exact table the retired explode → groupBy shape
-  *      built, overflow to NULL past its vocab cap, and survive
-  *      merge-heavy plans (repartition invariance).
+  *   1. `qgram_freq_agg` / `long_freq_agg` — the one-pass frequency
+  *      fits — must produce the exact table the retired explode →
+  *      groupBy shape built, overflow to NULL past their vocab cap, and
+  *      survive merge-heavy plans (repartition invariance).
   *   2. `url_host` / `reg_domain` — the byte-walk F60 kernels — must be
   *      byte-equal to the retired regex/split chains on every
   *      manufactured shape plus adversarial corners (the DuckDB oracle
@@ -45,10 +46,16 @@ class Round21OptSpec extends SparkSpec {
       .groupBy(col("gh")).agg(count(lit(1)).as("freq"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  private def newFit(q: Int, maxVocab: Int): Option[(Seq[Long], Seq[Long])] = {
-    val row = fitCorpus
-      .agg(call_function("qgram_freq_agg", col("text"), lit(q), lit(maxVocab)).as("ft"))
-      .head()
+  /** Both bounded frequency aggregates fit the same gram table:
+    * `qgram_freq_agg` hashes the text in its own byte walk, and
+    * `long_freq_agg` counts the `char_qgram_hashes` array. */
+  private val fitAggs = Seq("qgram_freq_agg", "long_freq_agg")
+
+  private def newFit(fn: String, q: Int, maxVocab: Int,
+      corpus: DataFrame = fitCorpus): Option[(Seq[Long], Seq[Long])] = {
+    val in = if (fn == "qgram_freq_agg") Seq(col("text"), lit(q))
+      else Seq(call_function("char_qgram_hashes", col("text"), lit(q)))
+    val row = corpus.agg(call_function(fn, (in :+ lit(maxVocab)): _*).as("ft")).head()
     if (row.isNullAt(0)) None
     else {
       val st = row.getStruct(0)
@@ -57,34 +64,32 @@ class Round21OptSpec extends SparkSpec {
   }
 
   test("qgram_freq_agg matches the explode+groupBy fit exactly (q = 3, 4, 8)") {
-    for (q <- Seq(3, 4, 8)) {
+    for (fn <- fitAggs; q <- Seq(3, 4, 8)) {
       val old = oldFit(q)
-      val Some((keys, freqs)) = newFit(q, 1 << 16)
-      assert(keys == keys.sorted, s"q=$q: keys must be ascending")
-      assert(keys.distinct.size == keys.size, s"q=$q: keys must be distinct")
+      val Some((keys, freqs)) = newFit(fn, q, 1 << 16)
+      assert(keys == keys.sorted, s"$fn q=$q: keys must be ascending")
+      assert(keys.distinct.size == keys.size, s"$fn q=$q: keys must be distinct")
       assert(keys.zip(freqs).toMap == old,
-        s"q=$q: aggregate table != explode+groupBy table")
+        s"$fn q=$q: aggregate table != explode+groupBy table")
     }
   }
 
   test("qgram_freq_agg is repartition-invariant (merge path exercised)") {
     val base = oldFit(4)
-    for (n <- Seq(1, 3, 7)) {
-      val row = fitCorpus.repartition(n)
-        .agg(call_function("qgram_freq_agg", col("text"), lit(4), lit(1 << 16)).as("ft"))
-        .head()
-      val st = row.getStruct(0)
-      assert(st.getSeq[Long](0).zip(st.getSeq[Long](1)).toMap == base,
-        s"repartition($n) changed the fit")
+    for (fn <- fitAggs; n <- Seq(1, 3, 7)) {
+      val Some((keys, freqs)) = newFit(fn, 4, 1 << 16, fitCorpus.repartition(n))
+      assert(keys.zip(freqs).toMap == base, s"$fn: repartition($n) changed the fit")
     }
   }
 
   test("qgram_freq_agg overflows to NULL past its vocab cap — never a wrong table") {
     val vocab = oldFit(4).size
     assert(vocab > 8, "corpus too small to exercise overflow")
-    assert(newFit(4, vocab).isDefined, "cap == vocab must fit")
-    assert(newFit(4, vocab - 1).isEmpty, "cap == vocab-1 must overflow to NULL")
-    assert(newFit(4, 1).isEmpty)
+    for (fn <- fitAggs) {
+      assert(newFit(fn, 4, vocab).isDefined, s"$fn: cap == vocab must fit")
+      assert(newFit(fn, 4, vocab - 1).isEmpty, s"$fn: cap == vocab-1 must overflow to NULL")
+      assert(newFit(fn, 4, 1).isEmpty)
+    }
   }
 
   test("editDistancePairsQGram stays identical to the banded reference at q = 3") {
@@ -166,6 +171,35 @@ class Round21OptSpec extends SparkSpec {
 
   // ---- 3. cos_edges_above kernel ≡ the nested-loop join edge build --------
 
+  /** The retired nested-loop join edge build, verbatim. */
+  private def joinEdges(emb: DataFrame, minCos: Double): Set[(Long, Long)] = {
+    def n = emb.select(col("vec_id"), col("embedding"),
+      sqrt(call_function("fvec_dot", col("embedding"), col("embedding"))).as("nrm"))
+    def s(p: String) = n.select(col("vec_id").as(s"${p}_id"),
+      col("embedding").as(s"${p}_emb"), col("nrm").as(s"${p}_nrm"))
+    s("a").join(s("b"), col("a_id") < col("b_id"))
+      .filter(call_function("fvec_dot", col("a_emb"), col("b_emb")) /
+        (col("a_nrm") * col("b_nrm")) >= minCos)
+      .select(col("a_id"), col("b_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+  }
+
+  private def cosineEdges(emb: DataFrame, minCos: Double): Set[(Long, Long)] =
+    Similarity.exactCosineEdges(spark, emb, minCos)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** exactCosineEdges' driver-table pull, with its arguments. */
+  private def cosTable(emb: DataFrame) =
+    DriverTable.rows(emb.select(col("vec_id"), col("embedding")), Int.MaxValue)
+
+  /** `n` `dim`-d vectors, the second half a small perturbation of the
+    * first (cos ≈ 0.99), so every width produces edges. */
+  private def plantedEmb(n: Int, dim: Int, rnd: scala.util.Random): DataFrame = {
+    val base = Seq.fill(n / 2)(Seq.fill(dim)((rnd.nextFloat() - 0.5f) * 2f))
+    (base ++ base.map(_.map(x => x + (rnd.nextFloat() - 0.5f) * 0.1f))).zipWithIndex
+      .map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding").localCheckpoint()
+  }
+
   test("exactCosineEdges kernel path matches the join shape edge-for-edge") {
     val rnd = new scala.util.Random(21)
     val rows = (1L to 200L).map { i =>
@@ -173,22 +207,28 @@ class Round21OptSpec extends SparkSpec {
     } ++ Seq(
       (202L, null.asInstanceOf[Seq[Float]]) // null embedding drops both ways
     )
-    val emb = rows.toDF("vec_id", "embedding")
-    val minCos = 0.2
-    // the retired join shape, verbatim
-    def n = emb.select(col("vec_id"), col("embedding"),
-      sqrt(call_function("fvec_dot", col("embedding"), col("embedding"))).as("nrm"))
-    def s(p: String) = n.select(col("vec_id").as(s"${p}_id"),
-      col("embedding").as(s"${p}_emb"), col("nrm").as(s"${p}_nrm"))
-    val ref = s("a").join(s("b"), col("a_id") < col("b_id"))
-      .filter(call_function("fvec_dot", col("a_emb"), col("b_emb")) /
-        (col("a_nrm") * col("b_nrm")) >= minCos)
-      .select(col("a_id"), col("b_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = Similarity.exactCosineEdges(spark, emb, minCos)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == ref)
-    assert(ref.nonEmpty, "corpus must actually produce edges")
+    // 300 × 1024-d is ~1.2 MB of ids + floats, past the driver-table
+    // budget: the join path must give the same edges
+    for ((emb, kernel) <- Seq(rows.toDF("vec_id", "embedding") -> true,
+        plantedEmb(300, 1024, rnd) -> false)) {
+      assert(cosTable(emb).isDefined == kernel)
+      val ref = joinEdges(emb, 0.2)
+      assert(cosineEdges(emb, 0.2) == ref, s"kernel=$kernel")
+      assert(ref.nonEmpty, "corpus must actually produce edges")
+    }
+  }
+
+  test("exactCosineEdges on an over-budget table ships the driver at most MaxBytes plus one row") {
+    // 300 × 2048-d ≈ 2.4 MiB: the retired probe pulled every row before it
+    // checked its float budget
+    val emb = plantedEmb(300, 2048, new scala.util.Random(2048))
+    val (_, received) = org.apache.spark.ResultBytes.during(spark.sparkContext) {
+      Similarity.exactCosineEdges(spark, emb, 0.2)
+    }
+    val oneRow = 8L + 4L * 2048
+    assert(received <= DriverTable.MaxBytes + oneRow, s"driver received $received bytes")
+    assert(cosTable(emb).isEmpty)
+    assert(cosineEdges(emb, 0.2) == joinEdges(emb, 0.2))
   }
 
   test("cos_edges_above raises ANSI divide-by-zero on a zero-norm vector, like the join") {
@@ -216,31 +256,38 @@ class Round21OptSpec extends SparkSpec {
       5L -> "",
       6L -> null.asInstanceOf[String]
     ))
-    val terms = Seq("cat", "the", "dog", "absent", "cat", null)
-      .map(Tuple1(_)).toDF("term") // duplicate + null query terms
-    def canon(df: org.apache.spark.sql.DataFrame) =
+    val small = Seq("cat", "the", "dog", "absent", "cat", null)
+    // more distinct terms than the kernel path takes: the explode + join
+    // fallback must score identically
+    val wide = small ++ (0 until TextOps.MaxLiteralQueryTerms).map(i => s"t$i")
+    def canon(df: DataFrame) =
       df.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val got = canon(TextOps.bm25Scores(docs, terms))
-    // the retired shape, verbatim
-    val base = docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .select(col("doc_id"), col("toks"), size(col("toks")).cast("long").as("dl"))
-    val stats = base.agg(count(lit(1)).as("n_docs"),
-      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-    val tf = base.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
-      .join(broadcast(terms.select(col("term")).distinct()), Seq("term"))
-      .groupBy(col("doc_id"), col("term"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-    val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val idf6 = Tables.trunc6(log(
-      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)))
-    val tfNorm = (col("tf") * lit(2.25)) /
-      (col("tf") + lit(1.25) * (lit(1.0) - lit(0.75) + lit(0.75) * col("dl") / col("avgdl")))
-    val ref = canon(tf.join(broadcast(df_), Seq("term")).crossJoin(broadcast(stats))
-      .select(col("doc_id"), floor(idf6 * tfNorm * lit(1000000.0)).cast("long").as("c"))
-      .groupBy(col("doc_id")).agg(sum(col("c")).as("score_micros")))
-    assert(got == ref)
-    assert(ref.nonEmpty)
+    for ((termSeq, kernel) <- Seq(small -> true, wide -> false)) {
+      val terms = termSeq.map(Tuple1(_)).toDF("term") // duplicate + null query terms
+      assert(DriverTable.rows(terms.select(col("term")).distinct(),
+        TextOps.MaxLiteralQueryTerms).isDefined == kernel)
+      val got = canon(TextOps.bm25Scores(docs, terms))
+      // the retired shape, verbatim
+      val base = docs.filter(col("text").isNotNull)
+        .select(col("doc_id"), split(col("text"), " ").as("toks"))
+        .select(col("doc_id"), col("toks"), size(col("toks")).cast("long").as("dl"))
+      val stats = base.agg(count(lit(1)).as("n_docs"),
+        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
+      val tf = base.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
+        .join(broadcast(terms.select(col("term")).distinct()), Seq("term"))
+        .groupBy(col("doc_id"), col("term"), col("dl"))
+        .agg(count(lit(1)).as("tf"))
+      val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      val idf6 = Tables.trunc6(log(
+        (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)))
+      val tfNorm = (col("tf") * lit(2.25)) /
+        (col("tf") + lit(1.25) * (lit(1.0) - lit(0.75) + lit(0.75) * col("dl") / col("avgdl")))
+      val ref = canon(tf.join(broadcast(df_), Seq("term")).crossJoin(broadcast(stats))
+        .select(col("doc_id"), floor(idf6 * tfNorm * lit(1000000.0)).cast("long").as("c"))
+        .groupBy(col("doc_id")).agg(sum(col("c")).as("score_micros")))
+      assert(got == ref, s"kernel=$kernel")
+      assert(ref.nonEmpty)
+    }
   }
 
   test("url kernels propagate NULL like the chains they replaced") {

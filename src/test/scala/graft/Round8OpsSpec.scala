@@ -106,7 +106,7 @@ class Round8OpsSpec extends SparkSpec {
     // a q-gram vocabulary past the prefix-kernel cap forces the dfreq
     // fallback cut inside the edit-distance join
     val long = Seq.fill(300)(Seq.fill(300)(('a' + rnd.nextInt(26)).toChar).mkString)
-    assert(long.flatMap(_.sliding(4)).toSet.size > Dedup.PrefixKernelMaxVocab)
+    assert(long.flatMap(_.sliding(4)).toSet.size > DriverTable.MaxKeys)
     val longDocs = (long.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++
       long.take(5).zipWithIndex.map { case (t, i) => (1000L + i, t.updated(150, '#')) })
       .toDF("doc_id", "text")
